@@ -6,13 +6,15 @@ import java.util.{Map => JMap}
 import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.classic.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxFiles, SupportsAdmissionControl}
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -37,8 +39,19 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - admission control: `maxFilesPerTrigger` bounds per-micro-batch
   *    intake via [[ReadLimit.maxFiles]] (ST5 backpressure,
   *    pipeline_manager.py:122-123);
-  *  - batch reads scan the whole directory with one partition per file —
-  *    embarrassingly parallel, no driver-side content reads.
+  *  - batch reads scan the whole directory.
+  *
+  * Input partitions (batch and micro-batch alike) pack several files
+  * each, by Spark's own file-source rule (`FilePartition`) and the
+  * session's confs `spark.sql.files.maxPartitionBytes`,
+  * `spark.sql.files.openCostInBytes`, `spark.sql.files.minPartitionNum`
+  * (unset: the session's default parallelism) and
+  * `spark.sql.files.maxPartitionNum`: every file costs its length plus
+  * the open cost, a partition holds at most
+  * `min(maxPartitionBytes, max(openCost, total / minPartitionNum))`, and
+  * files fill partitions next-fit in name order, so a 47-file backlog at
+  * four cores is four tasks, not 47, and a file bigger than the split is
+  * a partition of its own.
   *
   * Offset compaction (`maxFileAgeMs`, default 7 days — the same model
   * and default as Spark's FileStreamSource `maxFileAge`): without it the
@@ -65,8 +78,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * ignored, and a consumed file that is deleted and later re-created
   * with a fresh mtime counts as new data.
   *
-  * Scale notes: the driver only ever lists the directory and ships file
-  * names; executors read file contents. Tab-splitting mirrors
+  * Scale notes: the driver never reads file contents. It ships file names
+  * and needs only each planned file's length: from the directory listing
+  * for a batch read, from one `getFileStatus` per file for a micro-batch
+  * (first run or replay alike) — a planned file that has vanished fails
+  * the batch instead of being skipped. Executors read the files of a
+  * partition one after another. Tab-splitting mirrors
   * `Sources.parseEnvelope` exactly (a line without a tab yields
   * topic = payload = line, later dropped by the validity gate) so bridge
   * and connector produce identical rows. */
@@ -99,24 +116,38 @@ object EnvelopeSource {
   val DefaultMaxFileAgeMs: Long = 7L * 24 * 60 * 60 * 1000
 
   /** Visible (non-hidden, non-temporary) envelope files, lexicographically
-    * ordered — the deterministic arrival order of the drop directory. */
-  def listFiles(path: String, conf: Configuration): Seq[String] =
-    listFilesWithTimes(path, conf).map(_._1)
-
-  /** Same listing with modification times (for the streaming offset's
-    * age-based compaction). Names-only driver work either way. */
-  def listFilesWithTimes(path: String, conf: Configuration): Seq[(String, Long)] = {
+    * ordered — the deterministic arrival order of the drop directory.
+    * Metadata only (names, mtimes for the streaming offset's age-based
+    * compaction, lengths for packing): the driver never opens a file. */
+  def listStatuses(path: String, conf: Configuration): Seq[FileStatus] = {
     val p = new Path(path)
     val fs = p.getFileSystem(conf)
     if (!fs.exists(p)) return Seq.empty
     fs.listStatus(p).iterator
       .filter(_.isFile)
-      .map(f => (f.getPath.toString, f.getModificationTime))
-      .filterNot { case (f, _) =>
-        val name = f.substring(f.lastIndexOf('/') + 1)
+      .filterNot { f =>
+        val name = f.getPath.getName
         name.startsWith(".") || name.startsWith("_")
       }
-      .toSeq.sortBy(_._1)
+      .toSeq.sortBy(_.getPath.toString)
+  }
+
+  /** Input partitions for name-ordered (path, length) files: Spark's own
+    * `FilePartition.getFilePartitions` at the session's
+    * `FilePartition.maxSplitBytes`. It fills partitions next-fit in input
+    * order (the size sort is its scan caller's, not done here), so name
+    * order holds within and across partitions. */
+  private[bus] def planPartitions(session: SparkSession,
+                                  files: Seq[(String, Long)]): Array[InputPartition] = {
+    val openCost = session.sessionState.conf.filesOpenCostInBytes
+    val maxSplit = FilePartition.maxSplitBytes(session,
+      files.iterator.map(_._2 + openCost).sum)
+    val split = files.map { case (f, len) =>
+      PartitionedFile(InternalRow.empty, SparkPath.fromPathString(f), 0, len)
+    }
+    FilePartition.getFilePartitions(session, split, maxSplit)
+      .map(p => EnvelopeInputPartition(p.files.map(_.toPath.toString).toSeq): InputPartition)
+      .toArray
   }
 }
 
@@ -140,11 +171,12 @@ private[bus] class EnvelopeScan(path: String, maxFilesPerTrigger: Option[Int],
   override def readSchema(): StructType = EnvelopeSource.Schema
 
   override def toBatch: Batch = new Batch {
-    private val conf = new SerializableHadoopConf(
-      SparkSession.active.sessionState.newHadoopConf())
+    private val session = SparkSession.active
+    private val conf = new SerializableHadoopConf(session.sessionState.newHadoopConf())
     override def planInputPartitions(): Array[InputPartition] =
-      EnvelopeSource.listFiles(path, conf.value)
-        .map(EnvelopeInputPartition).toArray
+      EnvelopeSource.planPartitions(session,
+        EnvelopeSource.listStatuses(path, conf.value)
+          .map(f => (f.getPath.toString, f.getLen)))
     override def createReaderFactory(): PartitionReaderFactory =
       new EnvelopeReaderFactory(conf)
   }
@@ -203,8 +235,8 @@ private[bus] class EnvelopeMicroBatchStream(path: String,
                                             maxFileAgeMs: Long)
     extends MicroBatchStream with SupportsAdmissionControl {
 
-  private val conf = new SerializableHadoopConf(
-    SparkSession.active.sessionState.newHadoopConf())
+  private val session = SparkSession.active
+  private val conf = new SerializableHadoopConf(session.sessionState.newHadoopConf())
 
   override def getDefaultReadLimit: ReadLimit =
     maxFilesPerTrigger.map(ReadLimit.maxFiles).getOrElse(ReadLimit.allAvailable())
@@ -231,7 +263,8 @@ private[bus] class EnvelopeMicroBatchStream(path: String,
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val prev = start.asInstanceOf[EnvelopeOffset]
     val horizon = prev.horizon(maxFileAgeMs)
-    val listed = EnvelopeSource.listFilesWithTimes(path, conf.value)
+    val listed = EnvelopeSource.listStatuses(path, conf.value)
+      .map(f => (f.getPath.toString, f.getModificationTime))
     // Legacy-checkpoint migration: pre-compaction offsets restore with
     // entry mtimes pinned to Long.MaxValue (no recorded age), which
     // would keep them in the consumed set forever. One listing pass —
@@ -294,10 +327,16 @@ private[bus] class EnvelopeMicroBatchStream(path: String,
     throw new UnsupportedOperationException(
       "admission-controlled source: latestOffset(start, limit) is used")
 
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
-    (end.asInstanceOf[EnvelopeOffset].files.keySet --
-      start.asInstanceOf[EnvelopeOffset].files.keySet)
-      .toArray.sorted.map(EnvelopeInputPartition(_): InputPartition)
+  /** The batch's files are `end` minus `start`, in name order, each
+    * stat'ed once for its length; a file gone by then fails the batch. */
+  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
+    val files = (end.asInstanceOf[EnvelopeOffset].files.keySet --
+      start.asInstanceOf[EnvelopeOffset].files.keySet).toSeq.sorted
+    EnvelopeSource.planPartitions(session, files.map { f =>
+      val p = new Path(f)
+      f -> p.getFileSystem(conf.value).getFileStatus(p).getLen
+    })
+  }
 
   override def createReaderFactory(): PartitionReaderFactory =
     new EnvelopeReaderFactory(conf)
@@ -307,29 +346,39 @@ private[bus] class EnvelopeMicroBatchStream(path: String,
   override def stop(): Unit = ()
 }
 
-private[bus] case class EnvelopeInputPartition(file: String) extends InputPartition
+/** One task's files, in name order. */
+private[bus] case class EnvelopeInputPartition(files: Seq[String]) extends InputPartition
 
 private[bus] class EnvelopeReaderFactory(conf: SerializableHadoopConf)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new EnvelopeReader(partition.asInstanceOf[EnvelopeInputPartition].file, conf.value)
+    new EnvelopeReader(partition.asInstanceOf[EnvelopeInputPartition].files, conf.value)
 }
 
-/** Executor-side line reader: streams one envelope file, splitting each
-  * line at the FIRST tab (payloads may contain tabs). A tabless line
-  * degrades to topic = payload = line — byte-identical behavior to
+/** Executor-side line reader: streams a partition's envelope files one
+  * after another (each closed before the next opens; a file's last line
+  * ends with the file, trailing newline or not), splitting each line at
+  * the FIRST tab (payloads may contain tabs). A tabless line degrades to
+  * topic = payload = line — byte-identical behavior to
   * `Sources.parseEnvelope`'s substring_index/instr expressions, so the
   * connector and the file bridge produce the same rows for any input. */
-private[bus] class EnvelopeReader(file: String, conf: Configuration)
+private[bus] class EnvelopeReader(files: Seq[String], conf: Configuration)
     extends PartitionReader[InternalRow] {
-  private val in = {
-    val p = new Path(file)
-    new BufferedReader(new InputStreamReader(
-      p.getFileSystem(conf).open(p), StandardCharsets.UTF_8))
-  }
+  private val pending = files.iterator
+  private var in: BufferedReader = _
   private var line: String = _
 
-  override def next(): Boolean = { line = in.readLine(); line != null }
+  override def next(): Boolean = {
+    line = if (in == null) null else in.readLine()
+    while (line == null && pending.hasNext) {
+      close()
+      val p = new Path(pending.next())
+      in = new BufferedReader(new InputStreamReader(
+        p.getFileSystem(conf).open(p), StandardCharsets.UTF_8))
+      line = in.readLine()
+    }
+    line != null
+  }
 
   override def get(): InternalRow = {
     val i = line.indexOf('\t')
@@ -338,7 +387,7 @@ private[bus] class EnvelopeReader(file: String, conf: Configuration)
     InternalRow(UTF8String.fromString(topic), UTF8String.fromString(payload))
   }
 
-  override def close(): Unit = in.close()
+  override def close(): Unit = if (in != null) { in.close(); in = null }
 }
 
 /** Serializable Hadoop-conf carrier (the standard Writable round-trip) so

@@ -19,7 +19,9 @@ import scala.jdk.CollectionConverters._
   * client), PUBLISH QoS 0 and 1, SUBSCRIBE/SUBACK with `+`/`#` wildcard
   * filters (SURVEY S2), UNSUBSCRIBE, retained messages (the K3
   * retained-status pattern: last retained payload per topic is delivered
-  * on subscribe), PINGREQ/PINGRESP, DISCONNECT.
+  * on subscribe), PINGREQ/PINGRESP, DISCONNECT. A QoS-2 PUBLISH or
+  * malformed framing closes that client's connection (its buffered QoS-0
+  * lines are still spooled); other connections are unaffected.
   *
   * Delivery → durability contract, mirroring broker QoS semantics:
   *  - QoS 1 PUBLISH spools (durable, atomic rename) BEFORE PUBACK — an
@@ -183,7 +185,11 @@ final class MqttBridge(spoolDir: String, port: Int = 0,
         }
       }
     } catch {
-      case _: IOException => () // includes EOF mid-packet: flush and close
+      // EOF mid-packet, and a client the bridge cannot serve: a QoS-2
+      // PUBLISH, a malformed remaining length or a body shorter than its
+      // own fields — close this connection, flush, keep serving others
+      case _: IOException | _: IllegalArgumentException |
+           _: IndexOutOfBoundsException => ()
     } finally {
       conns.remove(c)
       c.synchronized {

@@ -158,6 +158,73 @@ class MqttBridgeSpec extends SparkSpec {
     }
   }
 
+  /** Opens a raw 3.1.1 session, publishes `lines` at QoS 0, then sends
+    * `bad` — input the bridge cannot serve. The bridge must close the
+    * connection (no uncaught exception on its connection thread), spool
+    * the buffered lines, and keep serving new clients. */
+  private def closesCleanlyOn(name: String)(bad: java.io.OutputStream => Unit): Unit = {
+    val spool = Files.createTempDirectory(s"mqtt-$name").toString
+    val uncaught = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val prevHandler = Thread.getDefaultUncaughtExceptionHandler
+    Thread.setDefaultUncaughtExceptionHandler { (t: Thread, e: Throwable) =>
+      if (t.getName == "graft-mqtt-conn") uncaught.add(e)
+      else if (prevHandler != null) prevHandler.uncaughtException(t, e)
+    }
+    val bridge = new MqttBridge(spool).start()
+    try {
+      val sock = new java.net.Socket("127.0.0.1", bridge.boundPort)
+      sock.setSoTimeout(10000)
+      val out = sock.getOutputStream
+      Mqtt.writePacket(out, Mqtt.Connect, 0, new Mqtt.Writer().str("MQTT").u8(4)
+        .u8(0x02).u16(60).str(name).bytes)
+      assert(Mqtt.readPacket(sock.getInputStream).get.tpe == Mqtt.ConnAck)
+      (1 to 3).foreach { i =>
+        Mqtt.writePacket(out, Mqtt.Publish, 0,
+          new Mqtt.Writer().str("t/a").raw(s"m$i".getBytes).bytes)
+      }
+      bad(out)
+      assert(sock.getInputStream.read() == -1, "the bridge closes the connection")
+      sock.close()
+      awaitCond("buffered QoS-0 lines are spooled on close") {
+        Files.list(Paths.get(spool)).toArray.length >= 1
+      }
+      val rows = spark.read.format("graft-bus").load(spool).collect()
+      assert(rows.map(_.getString(1)).toSeq == Seq("m1", "m2", "m3"))
+      // the bridge still serves other clients
+      val c = new MqttClient("127.0.0.1", bridge.boundPort, s"$name-after").connect()
+      c.publish("t/b", "after", qos = 1)
+      c.disconnect()
+      assert(spark.read.format("graft-bus").load(spool).count() == 4)
+      assert(uncaught.isEmpty, s"uncaught on a connection thread: $uncaught")
+    } finally {
+      bridge.stop()
+      Thread.setDefaultUncaughtExceptionHandler(prevHandler)
+    }
+  }
+
+  test("a QoS-2 PUBLISH closes the connection cleanly and flushes QoS 0") {
+    closesCleanlyOn("qos2") { out =>
+      Mqtt.writePacket(out, Mqtt.Publish, 2 << 1,
+        new Mqtt.Writer().str("t/a").u16(7).raw("qos2".getBytes).bytes)
+    }
+  }
+
+  test("a malformed remaining length closes the connection cleanly") {
+    closesCleanlyOn("badlen") { out =>
+      // five continuation bytes: longer than the spec's four-byte varint
+      out.write(Array[Byte](0x30, -1, -1, -1, -1, -1))
+      out.flush()
+    }
+  }
+
+  test("a PUBLISH body shorter than its topic closes the connection cleanly") {
+    closesCleanlyOn("short") { out =>
+      // the topic length prefix claims 100 bytes; the body holds one
+      Mqtt.writePacket(out, Mqtt.Publish, 0,
+        new Mqtt.Writer().u16(100).raw("t".getBytes).bytes)
+    }
+  }
+
   test("QoS-0 publishes batch and flush on disconnect") {
     val spool = Files.createTempDirectory("mqtt-qos0").toString
     val bridge = new MqttBridge(spool).start()

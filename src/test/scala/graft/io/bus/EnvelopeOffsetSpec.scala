@@ -20,7 +20,8 @@ class EnvelopeOffsetSpec extends graft.SparkSpec {
       Files.setLastModifiedTime(Paths.get(dir, n),
         FileTime.from(java.time.Instant.now().minusSeconds(600 - i)))
     }
-    val listed = EnvelopeSource.listFilesWithTimes(dir, conf).toMap
+    val listed = EnvelopeSource.listStatuses(dir, conf)
+      .map(f => f.getPath.toString -> f.getModificationTime).toMap
     val oldPaths = listed.keySet
     assert(oldPaths.size == 2)
 
@@ -53,12 +54,12 @@ class EnvelopeOffsetSpec extends graft.SparkSpec {
     Files.write(Paths.get(dir, "now.txt"), "t/now\tpayload".getBytes)
     val next = stream.latestOffset(migrated, ReadLimit.allAvailable())
       .asInstanceOf[EnvelopeOffset]
-    val nowPath = EnvelopeSource.listFilesWithTimes(dir, conf)
-      .map(_._1).filter(_.endsWith("now.txt"))
+    val nowPath = EnvelopeSource.listStatuses(dir, conf)
+      .map(_.getPath.toString).filter(_.endsWith("now.txt"))
     assert(next.files.keySet == nowPath.toSet,
       s"legacy entries must age out after one retention window: ${next.files}")
     assert(stream.planInputPartitions(migrated, next).map(
-        _.asInstanceOf[EnvelopeInputPartition].file).toSeq == nowPath,
+        _.asInstanceOf[EnvelopeInputPartition].files).toSeq == Seq(nowPath),
       "only the fresh file is planned; compacted entries never replay")
   }
 }
